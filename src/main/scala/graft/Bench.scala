@@ -117,7 +117,7 @@ object Bench {
     (headline ++ pipeline ++ analytics).foreach { name =>
       try SparkEntry.queries(name)(spark, warmDir)
         .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
+      catch { case scala.util.control.NonFatal(_) => () }
     }
 
     // min of 5 measured runs per query, the passes INTERLEAVED

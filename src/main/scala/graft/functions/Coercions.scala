@@ -11,8 +11,9 @@ import graft.sources.ChType
   *
   * Semantics replicated:
   *   - `input_format_null_as_default` (main.py:13): NULL numeric -> 0,
-  *     NULL string -> "", NULL bool -> false. Temporal types stay
-  *     nullable (the reference parses those to None on failure).
+  *     NULL string -> "", NULL bool -> false, NULL bytes -> empty
+  *     bytes. Temporal types stay nullable (the reference parses
+  *     those to None on failure).
   *   - UInt32/UInt64 wraparound masking (main.py:89-91).
   *   - Lenient temporal parsing (main.py:18-37): strip fractional
   *     seconds, trim, strict pattern, NULL on mismatch or blank.
@@ -39,6 +40,8 @@ object Coercions {
     case ChType.Float32 | ChType.Float64 =>
       coalesce(c.cast(DoubleType), lit(0.0))
     case ChType.Str      => coalesce(c.cast(StringType), lit(""))
+    case ChType.Binary   =>
+      coalesce(c.cast(BinaryType), lit(Array.emptyByteArray))
     case ChType.Bool     => coalesce(c.cast(BooleanType), lit(false))
     case ChType.DateTime => parseDateTime(c.cast(StringType))
     case ChType.Date     => parseDate(c.cast(StringType))

@@ -6,7 +6,8 @@ import org.apache.spark.sql.types._
   * surface (reference main.py:39-54, 118-136). Spark carries:
   *   - UInt32 as LongType (value range enforced by wraparound masking),
   *   - UInt64 as LongType bit-pattern (two's-complement reinterpret),
-  *   - DateTime as TimestampType (UTC), Date as DateType.
+  *   - DateTime as TimestampType (UTC), Date as DateType,
+  *   - Binary (a ClickHouse `String` of raw bytes) as BinaryType.
   */
 sealed abstract class ChType(val sql: String) {
   def spark: DataType = this match {
@@ -17,6 +18,7 @@ sealed abstract class ChType(val sql: String) {
     case ChType.Float32   => FloatType
     case ChType.Float64   => DoubleType
     case ChType.Str       => StringType
+    case ChType.Binary    => BinaryType
     case ChType.DateTime  => TimestampType
     case ChType.Date      => DateType
     case ChType.Bool      => BooleanType
@@ -32,6 +34,10 @@ object ChType {
   case object Float32  extends ChType("Float32")
   case object Float64  extends ChType("Float64")
   case object Str      extends ChType("String")
+  /** A BLOB's bytes, kept as they are: ClickHouse `String` is a byte
+    * string, so the bytes need no text decoding on either side.
+    */
+  case object Binary   extends ChType("String")
   case object DateTime extends ChType("DateTime")
   case object Date     extends ChType("Date")
   case object Bool     extends ChType("Boolean")

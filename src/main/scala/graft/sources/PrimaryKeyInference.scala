@@ -18,16 +18,23 @@ import org.apache.spark.sql.types._
   *      documented convention of every table this engine ships
   *      (TPC-H `?_?key`, `doc_id`, `event_id`, `emb_id`);
   *   3. DATA CONFIRMATION — a candidate prefix is accepted only when
-  *      it is actually unique: `count(DISTINCT struct(cands)) ==
-  *      count(*)`, one aggregation per attempted prefix, at most
-  *      `maxCols` attempts. Greedy extension covers composite keys
-  *      ((l_orderkey, l_linenumber)-shaped) without a combinatorial
-  *      search.
+  *      it is actually unique: `count(DISTINCT struct(prefix)) ==
+  *      count(*)`. Every prefix of up to `maxCols` candidates is counted
+  *      in ONE aggregation (one Spark action, one pruned scan), and the
+  *      first unique prefix wins. Greedy extension covers composite
+  *      keys ((l_orderkey, l_linenumber)-shaped) without a
+  *      combinatorial search.
   *
-  * At 100 TB each confirmation is a full-scan distinct — bounded to
-  * `maxCols` shuffles of ONLY the candidate columns (pruned scan), and
-  * run once per table migration, not per query. Callers that cannot
-  * afford it pass `confirm = false` to accept the top-ranked naming
+  * At 100 TB the confirmation is a full-scan multi-distinct over ONLY
+  * the candidate columns, run once per table migration, not per query.
+  * A caller that already knows the row count (the migration observes
+  * it in its write pass) passes `rows` and the count leaves the
+  * aggregation. The migration confirms over the STAGED data: the
+  * ReplacingMergeTree sorting key collapses rows with equal keys, so
+  * uniqueness must hold on the values the target receives — where
+  * null-as-default turned a NULL key value into 0 (or ''), a value
+  * already present makes that prefix non-unique. Callers that cannot
+  * afford a scan pass `confirm = false` to accept the top-ranked naming
   * candidate unverified (what the reference itself does: it trusts the
   * declared pk, never checks uniqueness).
   */
@@ -68,18 +75,21 @@ object PrimaryKeyInference {
     * order, extending the prefix until it is unique (confirmed against
     * the data) or `maxCols` is hit. Returns None when nothing key-ish
     * exists or no prefix is unique — the DDL then falls back to
-    * `tuple()` exactly like the reference with a pk-less table.
+    * `tuple()` exactly like the reference with a pk-less table. `rows`
+    * is `df`'s row count when the caller already has it.
     */
   def infer(df: DataFrame, table: String, maxCols: Int = 2,
-            confirm: Boolean = true): Option[Seq[String]] = {
+            confirm: Boolean = true,
+            rows: Option[Long] = None): Option[Seq[String]] = {
     val cands = candidates(table, df.schema)
     if (cands.isEmpty || rank(table, cands.head) == 4) return None
     if (!confirm) return Some(Seq(cands.head))
-    val total = df.count()
-    (1 to math.min(maxCols, cands.size)).iterator.map(cands.take)
-      .find { prefix =>
-        df.select(countDistinct(struct(prefix.map(col): _*)))
-          .head().getLong(0) == total
-      }
+    val prefixes = (1 to math.min(maxCols, cands.size)).map(cands.take)
+    val distinct = prefixes.map(p => countDistinct(struct(p.map(col): _*)))
+    val aggs = if (rows.isEmpty) count(lit(1)) +: distinct else distinct
+    val r = df.select(aggs: _*).head()
+    val total = rows.getOrElse(r.getLong(0))
+    val counts = (0 until r.length).map(r.getLong).takeRight(prefixes.size)
+    prefixes.zip(counts).collectFirst { case (p, n) if n == total => p }
   }
 }

@@ -290,8 +290,7 @@ private[sources] final class SqliteCatalogCdcStream(path: String,
         val roots = SqliteFile.subtreeRanges(path, t)
           .filter { case (_, rLo, rHi) => rHi > loMark && rLo < hiMark }
           .map(_._1)
-        roots.grouped(
-            math.max(1, (roots.size + maxPartitions - 1) / maxPartitions))
+        SqliteFile.contiguousGroups(roots, maxPartitions)
           .map(SqliteCatalogSlice(t, _, h, loMark, hiMark))
       }
     }.toArray

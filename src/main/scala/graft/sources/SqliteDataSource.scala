@@ -27,8 +27,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *    never allocates the fat TEXT/BLOB columns (pages are still
   *    read; SQLite rows are contiguous).
   *  - **Partition planning in the planner**: one `InputPartition` per
-  *    b-tree subtree group, so `.explain` shows the real parallelism
-  *    and AQE sees honest row counts.
+  *    contiguous group of b-tree subtrees, at most the session's leaf
+  *    parallelism, so `.explain` shows the real parallelism and AQE
+  *    sees honest row counts.
   *  - Rows surface as `InternalRow` (UTF8String/primitives) — no
   *    Row-encoder round trip.
   *
@@ -683,10 +684,7 @@ private[sources] final class SqliteScan(path: String,
         val roots = SqliteFile.subtreeRanges(path, tdef)
           .filter { case (_, lo, hi) => hi > minEx && lo <= maxInc }
           .map(_._1)
-        if (roots.isEmpty) Array.empty
-        else roots.grouped(
-            math.max(1, (roots.size + maxPartitions - 1) / maxPartitions))
-          .map(SqliteSubtrees(_, h, minEx, maxInc)).toArray
+        scanGroups(roots).map(SqliteSubtrees(_, h, minEx, maxInc)).toArray
       // WITHOUT ROWID: the "index" IS the table — descend it directly
       case Some(IndexEq(_, v)) if tdef.withoutRowid =>
         Array(SqliteWrProbePartition(tdef, Nil, point(v), h))
@@ -712,11 +710,23 @@ private[sources] final class SqliteScan(path: String,
       case Some(IndexCompositeRange(idx, eq, r)) =>
         Array(SqliteIndexProbePartition(idx, r, tdef.rootPage, h, eq))
       case None =>
-        val roots = SqliteFile.subtreeRoots(path, tdef)
-        roots.grouped(
-            math.max(1, (roots.size + maxPartitions - 1) / maxPartitions))
+        scanGroups(SqliteFile.subtreeRoots(path, tdef))
           .map(SqliteSubtrees(_, h)).toArray
     }
+  }
+
+  /** A full or range scan's tasks: the subtree roots in at most
+    * `min(maxPartitions, spark.sql.leafNodeDefaultParallelism)`
+    * contiguous groups — the leaf parallelism Spark's own `range` and
+    * local scans use, which defaults to the cluster's default
+    * parallelism. A task per subtree costs a task's fixed overhead and
+    * one output file per subtree for no extra parallelism.
+    */
+  private def scanGroups(roots: Seq[Int]): Seq[Seq[Int]] = {
+    val spark = org.apache.spark.sql.SparkSession.active
+    val leaf = spark.conf.getOption("spark.sql.leafNodeDefaultParallelism")
+      .map(_.toInt).getOrElse(spark.sparkContext.defaultParallelism)
+    SqliteFile.contiguousGroups(roots, math.min(maxPartitions, leaf))
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -812,8 +822,7 @@ private[sources] final class SqliteCdcStream(path: String,
     val roots = SqliteFile.subtreeRanges(path, tdef)
       .filter { case (_, rLo, rHi) => rHi > lo && rLo < hi }
       .map(_._1)
-    roots.grouped(
-        math.max(1, (roots.size + maxPartitions - 1) / maxPartitions))
+    SqliteFile.contiguousGroups(roots, maxPartitions)
       .map(SqliteSubtrees(_, h, lo, hi)).toArray
   }
 

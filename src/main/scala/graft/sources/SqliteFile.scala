@@ -64,8 +64,8 @@ import org.apache.spark.sql.types._
   * REAL columns, `str(value)` into TEXT columns; a value that cannot
   * meet its column's type refuses with a named error instead of
   * silently corrupting. DATE/DATETIME columns surface as raw strings
-  * — parsing is the already-gated parse_datetime/parse_date
-  * operators' job downstream, not the byte reader's.
+  * — parsing is the job of the declared-type conform downstream
+  * (`MigrationJob.migrateSqliteFile`), not the byte reader's.
   */
 object SqliteFile {
 
@@ -539,6 +539,21 @@ object SqliteFile {
     } finally pf.close()
   }
 
+  /** `xs` in at most `n` contiguous groups whose sizes differ by at
+    * most one, in order; none for an empty `xs`. Keeping subtrees
+    * contiguous keeps each task's walk in b-tree (rowid) order.
+    */
+  def contiguousGroups[A](xs: Seq[A], n: Int): Seq[Seq[A]] =
+    if (xs.isEmpty) Nil
+    else {
+      val k = math.max(1, math.min(n, xs.size))
+      val (q, r) = (xs.size / k, xs.size % k)
+      (0 until k).map { i =>
+        val from = i * q + math.min(i, r)
+        xs.slice(from, from + q + (if (i < r) 1 else 0))
+      }
+    }
+
   /** The largest rowid in a rowid table — the incremental-read
     * watermark. O(tree depth): follows the rightmost pointer spine to
     * the last leaf cell, sqlite's own `SELECT max(rowid)` shape. None
@@ -706,8 +721,7 @@ object SqliteFile {
     if (roots.isEmpty)
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[Row], schema)
-    val groups = roots.grouped(
-      math.max(1, (roots.size + maxPartitions - 1) / maxPartitions)).toSeq
+    val groups = contiguousGroups(roots, maxPartitions)
     val rdd = spark.sparkContext
       .parallelize(groups, math.max(1, groups.size))
       .flatMap { subtrees =>
@@ -878,7 +892,7 @@ object SqliteFile {
     * binary through str(); BinaryType preserves it for the multimodal
     * pipeline, which treats blobs as opaque binary columns anyway.
     */
-  private[sources] def isBlob(c: ColumnDef): Boolean = {
+  private[graft] def isBlob(c: ColumnDef): Boolean = {
     val d = c.decl.trim.toUpperCase
     d.isEmpty || d.contains("BLOB")
   }
@@ -938,8 +952,7 @@ object SqliteFile {
     val recIdx = table.recordIndex
     val tname = table.name
     val roots = subtreeRoots(path, table)
-    val groups = roots.grouped(
-      math.max(1, (roots.size + maxPartitions - 1) / maxPartitions)).toSeq
+    val groups = contiguousGroups(roots, maxPartitions)
     val rdd = spark.sparkContext
       .parallelize(groups, math.max(1, groups.size))
       .flatMap { subtrees =>

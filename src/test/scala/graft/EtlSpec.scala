@@ -218,6 +218,56 @@ class PrimaryKeyInferenceSpec extends SparkFunSuite {
       .contains(Seq("t_id")))
   }
 
+  test("one Spark action per infer call, with or without a known row count") {
+    val li = Tables.lineitem(spark, sf)
+    val n = li.count()
+    val (none, a1) = ActionLog(spark)(
+      PrimaryKeyInference.infer(li, "lineitem", maxCols = 3))
+    assert(none.isEmpty && a1.map(_.name) === Seq("head"))
+    val orders = Tables.orders(spark, sf)
+    val nOrders = orders.count()
+    val (key, a2) = ActionLog(spark)(
+      PrimaryKeyInference.infer(orders, "orders", rows = Some(nOrders)))
+    assert(key.contains(Seq("o_orderkey")) && a2.map(_.name) === Seq("head"))
+    val (_, a3) = ActionLog(spark)(
+      PrimaryKeyInference.infer(li, "lineitem", rows = Some(n)))
+    assert(a3.size === 1)
+  }
+
+  test("a passed-in row count is trusted, not recounted") {
+    import spark.implicits._
+    val df = Seq((1L, 1L), (1L, 2L), (2L, 1L)).toDF("o_orderkey", "l_linenumber")
+    assert(PrimaryKeyInference.infer(df, "lineitem", rows = Some(3L))
+      .contains(Seq("o_orderkey", "l_linenumber")))
+    // o_orderkey has 2 distinct values: a (wrong) count of 2 accepts it
+    assert(PrimaryKeyInference.infer(df, "lineitem", rows = Some(2L))
+      .contains(Seq("o_orderkey")))
+  }
+
+  test("migrateTable confirms keys on the STAGED values: composite found, " +
+      "a NULL key defaulted onto an existing 0 is no key") {
+    import spark.implicits._
+    val out = java.nio.file.Files.createTempDirectory("graft-pk-staged").toString
+    try {
+      val pairs = Seq((1L, 1L), (1L, 2L), (2L, 1L))
+        .toDF("o_orderkey", "l_linenumber")
+      assert(graft.operators.MigrationJob.migrateTable(pairs, "db", "lineitem",
+        out).ddl.endsWith("ORDER BY (o_orderkey, l_linenumber)"))
+      // unique in the source (NULL is its own value) ...
+      val raw = Seq[(Option[Long], Double)]((Some(0L), 0.5), (None, 1.5),
+        (Some(1L), 2.5)).toDF("t_id", "score")
+      assert(PrimaryKeyInference.infer(raw, "t").contains(Seq("t_id")))
+      // ... but null-as-default stages the NULL as 0, and a
+      // ReplacingMergeTree sorting key on t_id would collapse the two
+      // 0 rows: the migration declares no key
+      val rep = graft.operators.MigrationJob.migrateTable(raw, "db", "t", out)
+      assert(rep.ddl.endsWith("ORDER BY tuple()"), rep.ddl)
+      assert(rep.nullsDefaulted("t_id") === 1L)
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
+    }
+  }
+
   test("migrateTable threads the inferred key into the DDL") {
     val out = java.nio.file.Files.createTempDirectory("graft-pk").toString
     try {
@@ -252,6 +302,67 @@ class MigrationJobSpec extends SparkFunSuite {
     files.foreach { f =>
       assert(spark.read.parquet(f.getAbsolutePath).count() <= 100L)
     }
+  }
+}
+
+class MigrationReportSpec extends SparkFunSuite {
+  import graft.operators.MigrationJob
+  import graft.sources.ChType
+
+  test("observed counters: hand-computed NULL defaults, unparsed " +
+      "temporals and wrapped uints, from the write pass alone") {
+    import spark.implicits._
+    val df = Seq[(Option[Long], Option[String], Option[String],
+        Option[Long], Option[String])](
+      (Some(1L), Some("2024-01-02"), Some("2024-01-02 03:04:05.678"),
+        Some(-1L), Some("x")),
+      (None, Some("  "), Some("garbage"), Some(5000000000L), None),
+      (Some(3L), Some("2024-13-40"), None, None, Some("y")),
+      (None, None, Some(".5"), Some(7L), None)
+    ).toDF("k", "d", "ts", "u", "s")
+    val target = Seq("k" -> ChType.Int64, "d" -> ChType.Date,
+      "ts" -> ChType.DateTime, "u" -> ChType.UInt32, "s" -> ChType.Str)
+    val out = java.nio.file.Files.createTempDirectory("graft-obs").toString
+    try {
+      val (rep, actions) = ActionLog(spark)(MigrationJob.migrateTable(
+        df, "db", "obs", out, inferPk = false, target = target))
+      assert(actions.size === 1, actions.map(_.name)) // the write, nothing else
+      assert(rep.rows === 4L)
+      assert(rep.nullsDefaulted === Map("k" -> 2L, "u" -> 1L, "s" -> 2L))
+      // "  " is blank and NULL is absent: neither counts as unparsed;
+      // ".5" is non-blank and parses to nothing, like the reference
+      assert(rep.temporalUnparsed === Map("d" -> 1L, "ts" -> 2L))
+      assert(rep.uintsWrapped === Map("u" -> 2L)) // -1 and 5000000000
+      assert(rep.ddl === "CREATE TABLE IF NOT EXISTS db.obs (k Int64, " +
+        "d Date, ts DateTime, u UInt32, s String) " +
+        "ENGINE = ReplacingMergeTree ORDER BY tuple()")
+      assert(spark.read.parquet(s"$out/obs").select("u").as[Long].collect()
+        .sorted.toSeq === Seq(0L, 7L, 705032704L, 4294967295L))
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
+    }
+  }
+
+  test("an empty table reports zero rows and zero counts") {
+    import spark.implicits._
+    val out = java.nio.file.Files.createTempDirectory("graft-obs-empty").toString
+    try {
+      val rep = MigrationJob.migrateTable(
+        Seq.empty[(Long, String)].toDF("t_id", "name"), "db", "t", out)
+      assert(rep.rows === 0L)
+      assert(rep.nullsDefaulted === Map("t_id" -> 0L, "name" -> 0L))
+      // no row contradicts uniqueness: the top candidate stands
+      assert(rep.ddl.endsWith("ORDER BY t_id"), rep.ddl)
+      assert(spark.read.parquet(s"$out/t").count() === 0L)
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
+    }
+  }
+
+  test("TableReport(table, rows, ddl) still builds, with empty counters") {
+    val r = MigrationJob.TableReport("t", 1L, "ddl")
+    assert(r.nullsDefaulted.isEmpty && r.temporalUnparsed.isEmpty &&
+      r.uintsWrapped.isEmpty)
   }
 }
 

@@ -70,6 +70,17 @@ class JdbcLoadRoundTripSpec extends SparkFunSuite {
     assert(reports.map(_.table).sorted == Seq("accounts", "ledger"))
     assert(reports.find(_.table == "accounts").get.rows == 700L)
     assert(reports.find(_.table == "ledger").get.rows == 750L)
+    // the rows come from the JDBC write pass itself (its Observation
+    // returned, no second extract) and equal the source's own counts
+    val sc = DriverManager.getConnection(srcUrl)
+    try reports.foreach { r =>
+      val rs = sc.createStatement()
+        .executeQuery(s"SELECT count(*) FROM ${r.table}")
+      assert(rs.next() && rs.getLong(1) == r.rows, r.table)
+    } finally sc.close()
+    // observed in the same pass: the 100 NULL notes (i % 7 == 0)
+    assert(reports.find(_.table == "accounts").get
+      .nullsDefaulted("a_note") == 100L)
 
     // the DDL in each report is EXACTLY what ClickHouseDdl generates
     // for the conformed schema + declared pk (the cluster-side half)
